@@ -25,32 +25,18 @@ object JobEntries {
   // re-warms the template cache.
   @volatile private var lastCompass: CompassSession = null
 
-  private def compassFor(s: SparkSession): CompassSession = synchronized {
+  private[graft] def compassFor(s: SparkSession): CompassSession = synchronized {
     Option(compassSessions.get(s)).flatMap(r => Option(r.get)).getOrElse {
       // The COMPASS corpus entries execute at x1 by contract (the scale
       // where per-query DRIVER work dominates — the same regime the
-      // corpus's interactive profile is gated on, JobCorpus.
-      // interactiveSession), so the CompassSession rides a child with
-      // the same three driver-work trims: AQE re-planning of exchange-
-      // free broadcast trees, whole-stage source generation + Janino
-      // for 113 distinct sub-second shapes, and constraint closure over
-      // JOB's dozens of equality predicates. Measured on the full
-      // corpus (CompassProfileProbe, r17): 14.5 -> 7.7 s cold /
-      // 9.0 -> 7.4 s warm, identical counts on all 113. At data scale
-      // the defaults win — a production CompassSession wraps the user's
-      // session untouched; this child is the ENTRY's bench profile, not
-      // a library default.
-      val c = s.newSession()
-      c.conf.set("spark.sql.adaptive.enabled", "false")
-      c.conf.set("spark.sql.codegen.wholeStage", "false")
-      c.conf.set("spark.sql.constraintPropagation.enabled", "false")
-      // Pinned (r21 verdict #1): this child runs AQE-OFF, so a parent
-      // session's preferSortMergeJoin=false would make the STATIC planner
-      // convert SMJ→SHJ from stats estimates with no runtime fallback —
-      // 32 concurrent interpreted (codegen-off) hash builds thrashed the
-      // heap on the r21 driver (q_job_compass exec_ms 29.6→91.6 s, and
-      // FASTER at 8 cores than 32). Joins here are broadcast-or-SMJ.
-      c.conf.set("spark.sql.join.preferSortMergeJoin", "true")
+      // corpus's interactive profile is gated on), so the CompassSession
+      // rides the same JOB child profile. Measured on the full corpus
+      // (CompassProfileProbe, r17): 14.5 -> 7.7 s cold / 9.0 -> 7.4 s
+      // warm, identical counts on all 113. At data scale the defaults
+      // win — a production CompassSession wraps the user's session
+      // untouched; this child is the ENTRY's bench profile, not a
+      // library default.
+      val c = graft.engine.GraftConf.jobChildProfile(s)
       val cs = new CompassSession(c,
         templateCache = Some(SketchTemplateCache.default()))
       compassSessions.put(s, new java.lang.ref.WeakReference(cs))

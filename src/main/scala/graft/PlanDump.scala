@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.engine.GraftConf
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round helper: write `.explain("formatted")` of named
@@ -24,21 +24,10 @@ object PlanDump {
     val tag = args(0)
     val adaptive = args.contains("--adaptive")
     val names = args.drop(1).filterNot(_ == "--adaptive").toSeq
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Mirror Bench's join policy so dumped plans match the timed ones.
-      .config("spark.sql.join.preferSortMergeJoin",
-        (!sys.env.get("GRAFT_PREFER_SMJ").contains("0")).toString)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("GRAFT_AQE_SHJ_THRESHOLD", "128m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val outDir = Paths.get(sys.env.getOrElse("GRAFT_PLANS_DIR", "plans/r22"))
+    val sfDir = GraftConf.sfDir
+    // The bench's own configuration, so dumped plans match the timed ones.
+    val spark = GraftConf.start(Bench.sessionBuilder)
+    val outDir = Paths.get(GraftConf.PlansDir.value)
     Files.createDirectories(outDir)
     val byName = Queries.all.map(e => e.name -> e).toMap
     names.foreach { n =>

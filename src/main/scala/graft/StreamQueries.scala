@@ -111,7 +111,7 @@ object StreamQueries {
     * can measure both sides of the dial on any corpus.
     */
   private[graft] def streamPartitions(name: String, dir: String): Int =
-    sys.env.get("GRAFT_STREAM_PARTITIONS").flatMap(_.toIntOption)
+    graft.engine.GraftConf.streamPartitions
       .getOrElse(streamPartitionsFor(name, eventsBytes(dir)))
 
   private def streamSession(s: SparkSession, partitions: Int = 8): SparkSession = synchronized {
@@ -259,6 +259,24 @@ object StreamQueries {
       }
     } finally q.stop()
 
+  /** This JVM's file-sink root: a fresh temp dir per process, so two
+    * JVMs sharing a tmpdir never delete each other's live sinks. Removed
+    * when the JVM exits.
+    */
+  private lazy val sinkRoot: java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory("graft_stream_sink-")
+    sys.addShutdownHook(deleteTree(d)): Unit
+    d
+  }
+
+  private def deleteTree(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p))
+      scala.util.Using.resource(java.nio.file.Files.walk(p)) { paths =>
+        import scala.jdk.CollectionConverters._
+        paths.iterator().asScala.toSeq.reverse
+          .foreach(f => java.nio.file.Files.deleteIfExists(f): Unit)
+      }
+
   private def availableNow =
     org.apache.spark.sql.streaming.Trigger.AvailableNow()
 
@@ -284,18 +302,12 @@ object StreamQueries {
     * numbers below cover the append entries only.
     */
   private def drainToMemory(df: DataFrame, name: String, mode: String): DataFrame = {
-    val useFile = mode == "append" &&
-      sys.env.get("GRAFT_STREAM_SINK").contains("file")
+    val useFile = mode == "append" && graft.engine.GraftConf.streamFileSink
     if (useFile) {
-      val base = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir", "/tmp"), "graft_stream_sink", name)
+      val base = sinkRoot.resolve(name)
       // Fresh dir per drain: the file sink's _spark_metadata log would
       // otherwise re-serve earlier laps' batches to the read-back.
-      if (java.nio.file.Files.exists(base)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p): Unit)
-      }
+      deleteTree(base)
       val data = base.resolve("data")
       val q = df.writeStream.outputMode(mode).format("parquet")
         .option("path", data.toString)

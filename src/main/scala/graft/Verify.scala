@@ -1,32 +1,24 @@
 package graft
+import graft.engine.GraftConf
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json for the DuckDB compare (tools/check_oracle.py) and
+  * engine_conf.json (the effective configuration, kept out of
+  * oracle_sql.json so the compare reads only oracles). */
 object Verify {
+  /** The same base engine configuration Bench runs under, so the
+    * correctness gate exercises the plans the bench times.
+    */
+  private[graft] def sessionBuilder: SparkSession.Builder = GraftConf.builder()
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [entry...]")
     val (sfDir, outDir) = (args(0), args(1))
     // Optional entry-name subset for fast local iteration; the driver
     // always calls with two args → full run.
     val subset = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Same engine join policy as Bench (guide §3.1): the correctness
-      // gate must exercise the plans the bench times. preferSortMergeJoin
-      // back at its default since r22 (the static flip had no runtime
-      // size fallback — r21 verdict #1); only the runtime-size-gated AQE
-      // SHJ threshold stays on. GRAFT_PREFER_SMJ=0 re-flips for A/B.
-      .config("spark.sql.join.preferSortMergeJoin",
-        (!sys.env.get("GRAFT_PREFER_SMJ").contains("0")).toString)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("GRAFT_AQE_SHJ_THRESHOLD", "128m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftConf.start(sessionBuilder)
     run(spark, sfDir, outDir, subset)
     spark.stop()
   }
@@ -57,18 +49,6 @@ object Verify {
       // useful within one query's action.
       graft.operators.OpCaches.releaseAll(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Partial-soundness oracles (ANN / signature entries) re-derive the
     // checkable columns of the SPARK RESULT: the SQL reads this run's
     // dump via read_parquet, so the output dir is substituted here, at
@@ -81,9 +61,12 @@ object Verify {
       graft.job.JobCorpus.scaleFor(sfDir))
     val json = SparkEntry.oracleSql
       .map { case (k, v) =>
-        s"${q(k)}: ${q(v.replace(Queries.VerifyOutToken, absOut)
-          .replace(graft.job.JobCorpus.JobDataToken, jobDir))}"
+        val oracle = v.replace(Queries.VerifyOutToken, absOut)
+          .replace(graft.job.JobCorpus.JobDataToken, jobDir)
+        s"${GraftConf.jsonString(k)}: ${GraftConf.jsonString(oracle)}"
       }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json): Unit
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/engine_conf.json"),
+      GraftConf.engineConfJson(spark)): Unit
   }
 }

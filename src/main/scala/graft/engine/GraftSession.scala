@@ -414,8 +414,9 @@ final class GraftSession(val spark: SparkSession, dataDir: String,
     graft.streaming.EventStream.currentCdcState(spark, stateDir)
 
   /** Release every cache this session pinned: COMPASS push-down caches and
-    * pipeline-operator internals. Returned DataFrames stay correct — they
-    * recompute if re-run.
+    * pipeline-operator internals. A returned DataFrame over a persisted
+    * relation recomputes if re-run; one over a checkpoint-backed
+    * relation is invalidated (see [[graft.operators.OpCaches]]).
     */
   def releaseCaches(): Unit = {
     compass.releaseCaches()

@@ -1,7 +1,7 @@
 package graft.job
 
 import graft.planner.{CompassSession, SketchTemplateCache}
-import org.apache.spark.sql.SparkSession
+import graft.engine.GraftConf
 
 /** One-off A/B harness (r13 verdict #5): runs every JOB compass family
   * through BOTH estimator modes ([[JobCorpus.abEstimatorModes]]) and
@@ -11,14 +11,7 @@ import org.apache.spark.sql.SparkSession
   */
 object EstimatorABMain {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftConf.session()
     val cs = new CompassSession(spark,
       templateCache = Some(SketchTemplateCache.default()))
 
@@ -77,7 +70,7 @@ object EstimatorABMain {
     // JOB scale follows SPARK_GRAFT_SF_DIR like the bench does (x1 at
     // the default/sf0.01, x10 at sf0.1) — the x10 run answers whether
     // the x1 ranking findings survive a scale-up.
-    val jobDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "")
+    val jobDir = GraftConf.SfDir.raw.getOrElse("")
     val jobScale = JobCorpus.scaleFor(jobDir)
     JobCorpus.warmCompass(spark, cs, sfDir = jobDir)
     val t0 = System.nanoTime()
@@ -87,7 +80,7 @@ object EstimatorABMain {
 
     // The TPC-H quality battery — the workload the alignment guard was
     // born on ("nine" = the 9-way region diamond regression pin).
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val dir = GraftConf.SfDir.raw.getOrElse(GraftConf.testData("sf0.01"))
     graft.Tables.registerAll(spark, dir)
     val t1 = System.nanoTime()
     val tpchRows = graft.planner.OptimizerQuality.specFamilies.map {

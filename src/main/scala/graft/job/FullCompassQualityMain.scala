@@ -1,7 +1,7 @@
 package graft.job
 
 import graft.planner.{CompassSession, OptimizerQuality, SketchTemplateCache}
-import org.apache.spark.sql.SparkSession
+import graft.engine.GraftConf
 
 /** One-off measured-quality harness over the FULL JOB corpus (r16 verdict
   * #1): every one of the 113 queries through the COMPASS pipeline, its
@@ -15,14 +15,7 @@ import org.apache.spark.sql.SparkSession
   */
 object FullCompassQualityMain {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftConf.session()
     val cs = new CompassSession(spark,
       templateCache = Some(SketchTemplateCache.default()))
     JobCorpus.warmCompass(spark, cs)

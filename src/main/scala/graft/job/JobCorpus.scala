@@ -1,5 +1,6 @@
 package graft.job
 
+import graft.engine.GraftConf
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -540,20 +541,7 @@ object JobCorpus {
     synchronized {
       Option(interactiveSessions.get(spark)).filter(_._1 == m).map(_._2)
         .getOrElse {
-          val c = spark.newSession()
-          c.conf.set("spark.sql.adaptive.enabled", "false")
-          // A/B knob (r21): GRAFT_JOB_CODEGEN=1 keeps whole-stage codegen
-          // on inside the trim, to re-measure the r18 "codegen off wins"
-          // call as data scale and hosts drift.
-          if (!sys.env.get("GRAFT_JOB_CODEGEN").contains("1"))
-            c.conf.set("spark.sql.codegen.wholeStage", "false")
-          c.conf.set("spark.sql.constraintPropagation.enabled", "false")
-          // Pinned (r21 verdict #1): AQE is off in this trim, so an
-          // inherited preferSortMergeJoin=false means STATIC stats-based
-          // SMJ→SHJ conversion with no runtime size fallback — the exact
-          // interaction that regressed the r21 driver bench (q_job_corpus
-          // 44.1→55.3 s). The trim's joins stay broadcast-or-SMJ.
-          c.conf.set("spark.sql.join.preferSortMergeJoin", "true")
+          val c = GraftConf.jobChildProfile(spark)
           val path = dataPathFor(m)
           tableNames.foreach { t =>
             c.read.parquet(s"$path/$t.parquet").createOrReplaceTempView(t)
@@ -579,10 +567,7 @@ object JobCorpus {
     * cross-section; override via GRAFT_JOB_THREADS to reproduce the
     * wide shape.
     */
-  private def submitThreads: Int =
-    // Clamp: a zero/negative override would throw out of
-    // Executors.newFixedThreadPool and kill the corpus entry.
-    math.max(1, sys.env.get("GRAFT_JOB_THREADS").flatMap(_.toIntOption).getOrElse(4))
+  private def submitThreads: Int = GraftConf.JobThreads.value.toInt
 
   /** Per-query wall-clock latencies (ms) of the most recent [[runAll]] —
     * read by Bench so the official record carries a contention-robust
@@ -644,8 +629,7 @@ object JobCorpus {
       // the scale campaign's x100 default-profile lap legitimately runs
       // longer (data-dominated shuffle joins) — overridable, not a code
       // path the driver gate ever takes.
-      val timeoutMin = sys.env.get("GRAFT_CORPUS_TIMEOUT_MIN")
-        .flatMap(_.toIntOption).getOrElse(15)
+      val timeoutMin = GraftConf.CorpusTimeoutMin.value.toInt
       val out = scala.concurrent.Await
         .result(scala.concurrent.Future.sequence(futures),
           scala.concurrent.duration.Duration(timeoutMin, "min"))
@@ -830,8 +814,7 @@ object JobCorpus {
       }
       scala.concurrent.Await.result(
         scala.concurrent.Future.sequence(futures),
-        scala.concurrent.duration.Duration(sys.env.get("GRAFT_CORPUS_TIMEOUT_MIN")
-          .flatMap(_.toIntOption).getOrElse(15), "min"))
+        scala.concurrent.duration.Duration(GraftConf.CorpusTimeoutMin.value.toInt, "min"))
     } finally pool.shutdown()
     lastCompassRuns = runs
     runs.map(r => r.name -> r.count).toDF("q", "n").orderBy("q")

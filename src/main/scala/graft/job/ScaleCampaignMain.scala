@@ -1,5 +1,6 @@
 package graft.job
 
+import graft.engine.GraftConf
 import org.apache.spark.sql.SparkSession
 import graft.planner.{CompassSession, SketchTemplateCache}
 
@@ -31,13 +32,7 @@ object ScaleCampaignMain {
     require(args.length >= 2, "usage: ScaleCampaignMain <profiles|compass|skip> <m>")
     val facet = args(0)
     val m = args(1).toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftConf.session()
     try {
       facet match {
         case "profiles" => profiles(spark, m)
@@ -77,8 +72,7 @@ object ScaleCampaignMain {
     // the id cancelled permanently, so reusing the bare query name would
     // insta-kill the next lap's run of the same query.
     val lapId = lapCounter.incrementAndGet()
-    val threads = math.max(1, sys.env.get("GRAFT_JOB_THREADS")
-      .flatMap(_.toIntOption).getOrElse(4))
+    val threads = GraftConf.JobThreads.value.toInt
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     val results = new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
     val timeouts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -151,8 +145,7 @@ object ScaleCampaignMain {
     JobCorpus.registerViews(dflt, m)
     val trimmed = JobCorpus.interactiveSession(spark, m)
 
-    val cap = sys.env.get("GRAFT_QUERY_CAP_SEC")
-      .flatMap(_.toIntOption).getOrElse(120)
+    val cap = GraftConf.QueryCapSec.value.toInt
     // Alternate cold laps (each profile's first lap pays its own JIT/
     // codegen), then a warm lap each.
     val coldD = cappedLap(dflt, cap)
@@ -192,8 +185,7 @@ object ScaleCampaignMain {
       if (JobCorpus.useInteractiveProfile(m)) {
         val d = spark.newSession(); JobCorpus.registerViews(d, m); d
       } else JobCorpus.interactiveSession(spark, m)
-    val cap = sys.env.get("GRAFT_QUERY_CAP_SEC")
-      .flatMap(_.toIntOption).getOrElse(120)
+    val cap = GraftConf.QueryCapSec.value.toInt
     val coldR = cappedLap(routed, cap)
     val coldO = cappedLap(other, cap)
     val warmR = cappedLap(routed, cap)
@@ -256,8 +248,7 @@ object ScaleCampaignMain {
     JobCorpus.ensureData(spark, m)
     val dflt = spark.newSession()
     JobCorpus.registerViews(dflt, m)
-    val cap = sys.env.get("GRAFT_QUERY_CAP_SEC")
-      .flatMap(_.toIntOption).getOrElse(120)
+    val cap = GraftConf.QueryCapSec.value.toInt
     val lap = cappedLap(dflt, cap)
     val byName = JobCorpus.queries.toMap
     val planSummaries = lap.timeouts.map { q =>

@@ -21,7 +21,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * abandoned-then-stopped session cannot leak for the JVM's life.
   * Usage: operators wrap `persist()` in [[track]]; harnesses
   * (Verify/Bench/GraftSession) call [[releaseAll]] between queries.
-  * Releasing never breaks a returned DataFrame — it just recomputes.
+  * Releasing a [[track]]ed persist only costs recomputation, but
+  * releasing a [[trackCheckpoint]]ed relation INVALIDATES it: a
+  * DataFrame built on a local checkpoint (or its dropped temp view)
+  * cannot be re-run after release. Release once the query's action is
+  * done.
   */
 object OpCaches {
   private val tracked = scala.collection.mutable.Map
@@ -75,7 +79,7 @@ object OpCaches {
       df.queryExecution.logical match {
         case lr: org.apache.spark.sql.execution.LogicalRDD =>
           lr.rdd.unpersist(false): Unit
-        case _ => () // reliable (dir-based) checkpoint: no blocks to drop
+        case _ => () // not checkpoint-backed: no RDD blocks of its own to drop
       }
     })
   }

@@ -120,7 +120,7 @@ final class SketchTemplateCache(dir: Path) {
   // snapshots location + mtime (a rewritten table simply misses).
 
   private val filteredCap: Int =
-    sys.env.get("GRAFT_FILTERED_CACHE_CAP").flatMap(_.toIntOption).getOrElse(512)
+    graft.engine.GraftConf.FilteredCacheCap.value.toInt
 
   private def filteredFile(rawKey: String): Path = {
     val h = MessageDigest.getInstance("SHA-256").digest(rawKey.getBytes("UTF-8"))
@@ -185,7 +185,5 @@ object SketchTemplateCache {
     * behavior, reference COMPASS_init_variables.txt:6).
     */
   def default(): SketchTemplateCache =
-    new SketchTemplateCache(Paths.get(
-      sys.env.getOrElse("GRAFT_SKETCH_CACHE_DIR",
-        sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-sketch-templates")))
+    new SketchTemplateCache(Paths.get(graft.engine.GraftConf.SketchCacheDir.value))
 }

@@ -15,7 +15,8 @@ import scala.collection.mutable
   * deterministically from the class representative so repeated runs (and the
   * template cache) agree.
   */
-final class SeedRegistry(val rows: Int, val baseSeed: Long = 0x5EEDC0DEL) extends Serializable {
+final class SeedRegistry(val rows: Int,
+    val baseSeed: Long = SeedRegistry.DefaultSeedBase) extends Serializable {
   type Key = (String, String) // (table name, column name)
 
   private val keyOrdering: Ordering[Key] =
@@ -68,4 +69,12 @@ final class SeedRegistry(val rows: Int, val baseSeed: Long = 0x5EEDC0DEL) extend
 
   /** All distinct equivalence-class representatives seen so far. */
   def classes: Set[Key] = parent.keys.map(find).toSet
+}
+
+object SeedRegistry {
+  /** The shipping seed base. Template-cache keys carry seed CLASS names,
+    * not seed values, so a different base must not share an on-disk
+    * template cache built under this one.
+    */
+  val DefaultSeedBase: Long = 0x5EEDC0DEL
 }

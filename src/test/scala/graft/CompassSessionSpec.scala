@@ -41,10 +41,7 @@ class CompassSessionSpec extends AnyFunSuite {
     // sketch jobs execute parent-extracted instance plans on the child.
     // Pin that seam: identical results and a published plan, both ways.
     Tables.registerAll(spark, dir)
-    val child = spark.newSession()
-    child.conf.set("spark.sql.adaptive.enabled", "false")
-    child.conf.set("spark.sql.codegen.wholeStage", "false")
-    child.conf.set("spark.sql.constraintPropagation.enabled", "false")
+    val child = graft.engine.GraftConf.jobChildProfile(spark)
     val cs = new CompassSession(child)
     val parentDf = spark.sql(fiveWay) // analyzed on the PARENT
     val viaChild = cs.optimize(parentDf).collect().map(_.toSeq)

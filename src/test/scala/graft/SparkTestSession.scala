@@ -1,5 +1,6 @@
 package graft
 
+import graft.engine.GraftConf
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all Spark-backed specs (JVM-wide — Spark
@@ -15,15 +16,10 @@ import org.apache.spark.sql.SparkSession
   * session (newSession()) and session-scoped caches.
   */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The engine's base configuration at a fixed 4 cores, so partition-
+    * count-sensitive specs see the same layout on every host.
+    */
+  def builder: SparkSession.Builder = GraftConf.builder(cpus = 4)
+
+  lazy val spark: SparkSession = GraftConf.start(builder)
 }

@@ -35,7 +35,8 @@ if _subset:
     oracle = {k: v for k, v in oracle.items() if k in _subset}
     # A misspelled subset name must not silently shrink the gate.
     if unknown:
-        print(f"WARNING: subset names not in oracle_sql.json: {sorted(unknown)}")
+        print(f"FAIL: subset names not in oracle_sql.json: {sorted(unknown)}")
+        sys.exit(1)
 
 # Optional per-entry oracle time budget (seconds), 3rd argv. The scale
 # campaign needs it: some oracles are deliberate brute-force
